@@ -4,13 +4,13 @@ Numpy's ``.npy`` (NEP 1 / ``numpy.lib.format``, public) is the
 de-facto tensor interchange file of ML corpora — dataset shards,
 embedding dumps, cached features — and ``.npz`` is simply a ZIP of
 ``.npy`` members (STORED by ``np.savez``, DEFLATE by
-``np.savez_compressed``).  This reader composes three existing
-by-hand layers instead of trusting any library on the read side:
+``np.savez_compressed``).  This reader composes the package's own
+container readers instead of ``np.load``:
 
 - the ZIP central-directory walk (``functions/zipscan.py``) locates
   members (plus the local-header skip to the data);
-- the hand-rolled DEFLATE inflater (``functions/inflate.py``)
-  decompresses ``savez_compressed`` members;
+- the raw-DEFLATE reader (``functions/inflate.py``, in-process
+  zlib) decompresses ``savez_compressed`` members;
 - a new NPY header parser: ``\\x93NUMPY`` magic, version 1/2 header
   length (u2/u4 little-endian), and the header DICT read with a
   strict regex grammar — NOT ``eval`` (the format docs themselves
@@ -148,7 +148,7 @@ def parse_npy(data: bytes) -> dict:
 
 def scan_npz(payload: bytes) -> dict:
     """Walk one .npz container: hand-rolled ZIP central directory ->
-    per-member local-header skip -> (hand inflate if DEFLATE) ->
+    per-member local-header skip -> (inflate if DEFLATE) ->
     :func:`parse_npy`, aggregated over all members.  Member CRC32s
     are verified against the central directory."""
     from .inflate import inflate

@@ -20,8 +20,8 @@ producer's bytes. Format facts are public (Apache ORC spec,
 COMPRESSED footers (round 10) decode through ORC's chunk framing —
 every compressed stream is a run of chunks, each led by a 3-byte
 little-endian header ``(chunk_length << 1) | is_original`` where
-``is_original=1`` stores the chunk raw — composed with the codec
-family this repo already hand-rolls: zlib = RAW DEFLATE
+``is_original=1`` stores the chunk raw — composed with the package's
+codec family: zlib = RAW DEFLATE
 (:mod:`.inflate`), snappy (:mod:`.snappy`), lz4 BLOCK format
 (:mod:`.lz4_codec`), zstd (:mod:`.zstd_codec`).  LZO stays a
 documented boundary (no decoder in the family, and no producer in

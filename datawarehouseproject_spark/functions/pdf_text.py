@@ -13,10 +13,9 @@ reference):
   references, booleans/null;
 - document walk: catalog -> page tree -> per-page ``/Contents``
   (single ref or array, ``/Length`` possibly indirect);
-- content streams are **FlateDecode**, decompressed by THIS repo's
-  hand-rolled DEFLATE inflater (:mod:`.inflate`) through the
-  zlib-container wrapper below (header check + Adler-32 verify) —
-  no zlib on the read side;
+- content streams are **FlateDecode**, decompressed by the
+  raw-DEFLATE reader (:mod:`.inflate`, in-process zlib) through the
+  zlib-container wrapper below (header check + Adler-32 verify);
 - text operators ``Tj``, ``'`` and ``TJ`` (string elements shown,
   kerning numbers skipped) with full literal-string unescaping.
 
@@ -45,6 +44,7 @@ components. Error contract: only ValueError escapes (fuzz-pinned).
 from __future__ import annotations
 
 import re
+import zlib
 
 from .inflate import inflate
 
@@ -66,11 +66,7 @@ def zlib_inflate(data: bytes, max_output: int = 1 << 26) -> bytes:
     if flg & 0x20:
         raise ValueError("zlib preset dictionary unsupported")
     out = inflate(data[2:-4], max_output=max_output)
-    a, b = 1, 0
-    for byte in out:
-        a = (a + byte) % 65521
-        b = (b + a) % 65521
-    if ((b << 16) | a) != int.from_bytes(data[-4:], "big"):
+    if zlib.adler32(out) != int.from_bytes(data[-4:], "big"):
         raise ValueError("zlib Adler-32 mismatch")
     return out
 
@@ -740,8 +736,6 @@ def synth_pdf(seed: int) -> bytes:
     one page + one FlateDecode content stream per page (page 0's
     /Length is an INDIRECT reference, exercising that resolution
     path), a shared Type1 font, a correct xref table and trailer."""
-    import zlib
-
     n_pages = 1 + seed % 3
     objects: dict[int, bytes] = {}
     # object numbering: 1 catalog, 2 pages, 3 font,
@@ -815,8 +809,6 @@ def synth_pdf_xref_stream(seed: int) -> bytes:
     (omitted / explicit / split subsections).  Same text plan as
     :func:`synth_pdf`, so the oracle shares its string formulas;
     object count differs (the ObjStm and XRef stream are objects)."""
-    import zlib
-
     n_pages = 1 + seed % 3
     first_page_obj = 4
     objstm_num = first_page_obj + 2 * n_pages
@@ -951,8 +943,6 @@ def synth_pdf_incremental(seed: int) -> bytes:
     trailer whose ``/Prev`` points at the original table.  Page 0's
     text becomes ``rev2 {seed} page 0``; other pages keep the base
     plan."""
-    import zlib
-
     base = synth_pdf(seed)
     m = None
     for m in re.finditer(rb"startxref\s+(\d+)", base[-256:]):

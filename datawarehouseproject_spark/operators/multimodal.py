@@ -1270,10 +1270,11 @@ def synthesize_deflate_media(ids: DataFrame, id_col: str = "doc_id") -> DataFram
 
 
 def extract_deflate_content(media: DataFrame, permissive: bool = False) -> DataFrame:
-    """HAND-ROLLED RFC 1951 inflate per payload
-    (:func:`..functions.inflate.inflate`): stored/fixed/dynamic
-    blocks, code-length-code machinery, LZ77 overlap copies — no
-    zlib on the decode side."""
+    """RFC 1951 inflate per payload through the in-process zlib
+    (:func:`..functions.inflate.inflate`: final block required,
+    output capped); the oracle recomputes every feature from the
+    synthesis plan, since producer and decoder are the same
+    library."""
 
     def loader():
         from ..functions.inflate import decode_deflate
@@ -1972,7 +1973,7 @@ def synthesize_npz_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def extract_npz_scan(media: DataFrame, permissive: bool = False) -> DataFrame:
     """NPY/NPZ tensor read from raw bytes per payload
     (:func:`..functions.npy_scan.scan_npz`): hand-rolled ZIP walk ->
-    hand inflate -> regex-grammar NPY header (no eval) -> struct
+    inflate -> regex-grammar NPY header (no eval) -> struct
     data decode with the fortran-order remap pinned by a
     position-weighted checksum."""
 
@@ -2052,12 +2053,14 @@ def synthesize_xz_text_media(
 
 
 def extract_xz_decode(media: DataFrame, permissive: bool = False) -> DataFrame:
-    """FULL .xz decode per payload — the hand-rolled LZMA range
-    decoder + LZMA2 chunk layer + verified per-block plaintext checks
-    (:func:`..functions.lzma_codec.decode_xz`); closes the round-8
-    triage-only boundary of :func:`extract_xz_scan`.  Returns the
-    recovered plaintext so the STATS stay JVM-side (the
-    Python-narrow / JVM-wide split of ``pdf_corpus_text_stats``)."""
+    """FULL .xz decode per payload through the in-process liblzma,
+    one stream at a time with every check verified
+    (:func:`..functions.lzma_codec.decode_xz`) — beyond the
+    triage-only :func:`extract_xz_scan`.  Producer and decoder are
+    the same library; the oracle recomputes every stat from the
+    synthesis plan.  Returns the recovered plaintext so the STATS
+    stay JVM-side (the Python-narrow / JVM-wide split of
+    ``pdf_corpus_text_stats``)."""
 
     def loader():
         from ..functions.lzma_codec import decode_xz

@@ -3410,27 +3410,19 @@ def q_xz_container_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "mapInPandas", "xz", "lzma", "codec"),
 )
 def q_xz_full_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL .xz decode, value-checked (round 9) — closes the round-8
-    boundary that `xz_container_scan` documented ("full LZMA2 decode
-    is out of scope: range coding is a different project").  The
-    hand-rolled stack in ``functions/lzma_codec.py`` is the third
-    distinct entropy machine in the codec family after Huffman
-    (DEFLATE/bzip2/JPEG) and RLE: the adaptive binary RANGE CODER
-    (11-bit probabilities, shift-5 update, byte-wise normalization),
-    the 12-state LZMA match model (lc/lp/pb contexts, matched
-    literals, the 4-deep rep-distance cache, slot/aligned/direct
-    distance tails), and the LZMA2 chunk layer (21-bit unpacked
-    sizes, per-chunk range restarts, the three reset levels) — plus
-    verification of every container CRC32 AND the per-block
-    plaintext check (CRC32 / hand-tabled CRC64-xz / SHA-256,
-    rotating by document).  Odd documents ship as two concatenated
-    streams.  The producer is STDLIB liblzma (independent
-    implementation); Python only decodes payload -> text, and the
-    line split / value extraction / aggregation all run JVM-side
-    (the narrow-Python/wide-JVM split of ``pdf_corpus_text_stats``).
-    The oracle recomputes every stat from the synthesis plan, so one
-    mis-stepped probability update or rep-distance rotation breaks
-    the value hash."""
+    """FULL .xz decode, value-checked — the payload decode that
+    `xz_container_scan` (index triage only) stops short of.
+    ``functions/lzma_codec.py`` decodes one stream at a time with the
+    in-process liblzma, verifying every container CRC32 AND the
+    per-block plaintext check (CRC32 / CRC64 / SHA-256, rotating by
+    document), and rejects what ``lzma.decompress`` would let
+    through: a corrupt second stream and unaligned stream padding.
+    Odd documents ship as two concatenated streams.  Producer and
+    decoder are the same library (liblzma), so the round trip alone
+    proves little: the oracle recomputes every stat from the
+    synthesis plan.  Python only decodes payload -> text; the line
+    split / value extraction / aggregation all run JVM-side (the
+    narrow-Python/wide-JVM split of ``pdf_corpus_text_stats``)."""
     _utc(spark)
     from ..operators.multimodal import (
         extract_xz_decode,
@@ -6906,10 +6898,9 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real PDF object tokenizer (dicts, arrays, names, literal
     strings with nesting/escape/octal, hex strings, indirect refs,
     indirect /Length resolution), catalog -> page tree -> /Contents
-    walk, and FlateDecode content streams decompressed by THIS
-    REPO'S hand-rolled DEFLATE inflater through a verified zlib
-    container (header check + Adler-32) — zlib never touches the
-    read side. Text comes from the Tj / ' / TJ show operators in
+    walk, and FlateDecode content streams decompressed by
+    ``functions/inflate.py`` (in-process zlib) through a verified
+    zlib container (header check + Adler-32). Text comes from the Tj / ' / TJ show operators in
     operator order (TJ kerning numbers skipped), and the oracle
     recomputes the ENTIRE extracted string per document, so the
     value hash pins unescaping, hex decode, stream inflation, and
@@ -7255,20 +7246,17 @@ def q_orc_rich_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("codec", "deflate", "decompression", "mapInPandas"),
 )
 def q_deflate_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAND-ROLLED DEFLATE decode (RFC 1951) — the algorithm under
-    gzip, ZIP, PNG, and HTTP content-encoding, decoded from first
-    principles with no zlib on the read side
-    (``functions/inflate.py``): LSB-first bit reading, stored blocks
-    with LEN/NLEN verification, fixed Huffman, dynamic Huffman
-    including the code-length-code run-length machinery, and LZ77
-    back-references with overlapping-copy semantics. The PRODUCER is
-    the stdlib zlib compressor rotating levels 0-9 (level 0 emits
-    stored blocks) and forcing Z_FIXED strategy on every 4th stream,
-    so all three block types are exercised in every batch; the
+    """Raw DEFLATE decode (RFC 1951) — the algorithm under gzip,
+    ZIP, PNG, and HTTP content-encoding — through
+    ``functions/inflate.py``: the in-process zlib, with the stream
+    required to reach its final block and the output capped. The
+    producer is the stdlib zlib compressor rotating levels 0-9
+    (level 0 emits stored blocks) and forcing Z_FIXED strategy on
+    every 4th stream, so all three block types are exercised in
+    every batch. Producer and decoder are the same library, so the
     oracle recomputes byte counts/sums/endpoints from the synthesis
-    formulas, so a value match proves the recovered BYTES, not just
-    that something decompressed. Completes the by-hand decompression
-    family begun with bzip2 (``bz2_corpus_decode``)."""
+    formulas: a value match proves the recovered BYTES, not just
+    that something decompressed."""
     from ..operators.multimodal import (
         extract_deflate_content,
         synthesize_deflate_media,

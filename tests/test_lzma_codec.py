@@ -1,21 +1,18 @@
-"""Full LZMA / LZMA2 / .xz decoder — functions/lzma_codec.py
-(round 9): range coder + 12-state match model + LZMA2 chunk layer +
-container checks, pinned against the stdlib lzma (liblzma) producer.
-Closes the round-8 boundary documented in functions/xz_scan.py
-("full LZMA2 decode is out of scope")."""
+""".xz decode — functions/lzma_codec.py: every check type, every
+stream layout, and the checks a plain ``lzma.decompress`` skips
+(a corrupt non-first stream, unaligned stream padding)."""
 
 from __future__ import annotations
 
 import hashlib
 import lzma as stdlzma
 import random
+import struct
+import zlib
 
 import pytest
 
 from datawarehouseproject_spark.functions.lzma_codec import (
-    crc64_xz,
-    decode_lzma2,
-    decode_lzma_alone,
     decode_xz,
     synth_xz_text,
     synth_xz_text_plan,
@@ -35,11 +32,11 @@ def _random_bytes(n: int, seed: int = 1) -> bytes:
     return bytes(rnd.randrange(256) for _ in range(n))
 
 
-def test_crc64_xz_known_vector():
-    # public check value for the ECMA-182 reflected CRC-64 ("CRC-64/XZ"):
-    # crc64("123456789") == 0x995DC9BBDF1939FA
-    assert crc64_xz(b"123456789") == 0x995DC9BBDF1939FA
-    assert crc64_xz(b"") == 0
+def _block_check_end(stream: bytes) -> int:
+    """Offset just past the last block's check field: the index starts
+    there, and the footer's backward size says where."""
+    (backward,) = struct.unpack_from("<I", stream, len(stream) - 8)
+    return len(stream) - 12 - (backward + 1) * 4
 
 
 def test_xz_all_check_types_round_trip():
@@ -52,49 +49,6 @@ def test_xz_all_check_types_round_trip():
         ):
             x = stdlzma.compress(data, format=stdlzma.FORMAT_XZ, check=check)
             assert decode_xz(x) == data, (len(data), check)
-
-
-def test_lzma_alone_round_trip():
-    for data in _SHAPES:
-        a = stdlzma.compress(data, format=stdlzma.FORMAT_ALONE)
-        assert decode_lzma_alone(a) == data, len(data)
-
-
-def test_raw_lzma2_lclppb_grid():
-    """Every legal lc/lp/pb combination (liblzma requires
-    lc + lp <= 4) across the data shapes — a mis-indexed literal
-    context table or pos-state mask fails exactly here."""
-    for lc in range(5):
-        for lp in range(3):
-            if lc + lp > 4:
-                continue
-            for pb in range(3):
-                filt = [
-                    {
-                        "id": stdlzma.FILTER_LZMA2,
-                        "preset": 6,
-                        "lc": lc,
-                        "lp": lp,
-                        "pb": pb,
-                    }
-                ]
-                for data in _SHAPES:
-                    raw = stdlzma.compress(
-                        data, format=stdlzma.FORMAT_RAW, filters=filt
-                    )
-                    assert decode_lzma2(raw) == data, (lc, lp, pb, len(data))
-
-
-def test_lzma2_mid_stream_dict_reset_keeps_prior_output():
-    """Two concatenated raw LZMA2 sequences = a dict reset in the
-    middle; the decoder must fence match distances there WITHOUT
-    discarding the first half."""
-    f = [{"id": stdlzma.FILTER_LZMA2, "preset": 1}]
-    a, b = b"first part " * 30, b"second part " * 30
-    r1 = stdlzma.compress(a, format=stdlzma.FORMAT_RAW, filters=f)
-    r2 = stdlzma.compress(b, format=stdlzma.FORMAT_RAW, filters=f)
-    assert r1.endswith(b"\x00")
-    assert decode_lzma2(r1[:-1] + r2) == a + b
 
 
 def test_concatenated_xz_streams_with_padding():
@@ -125,8 +79,8 @@ def test_multi_chunk_large_payload():
 def test_checks_are_actually_verified():
     """Corrupting the stored check (last bytes before the index)
     must raise — prove the CRC32/CRC64/SHA-256 verification is live.
-    The check field sits between block data and the index; flip a
-    bit in it by locating it from a clean/corrupt diff."""
+    The check field sits between block data and the index, located
+    from the footer's backward size."""
     data = b"check me " * 100
     for check, name in (
         (stdlzma.CHECK_CRC32, "CRC32"),
@@ -134,16 +88,22 @@ def test_checks_are_actually_verified():
         (stdlzma.CHECK_SHA256, "SHA-256"),
     ):
         x = bytearray(stdlzma.compress(data, check=check))
-        # the block check field ends right before the index
-        # indicator; find the index by decoding the footer backward
-        import struct
-        import zlib
-
-        (backward,) = struct.unpack_from("<I", x, len(x) - 8)
-        idx_start = len(x) - 12 - (backward + 1) * 4
-        x[idx_start - 1] ^= 0x01  # last byte of the check
+        x[_block_check_end(x) - 1] ^= 0x01  # last byte of the check
         with pytest.raises(ValueError):
             decode_xz(bytes(x))
+
+
+def test_reserved_check_type_rejected():
+    """liblzma decodes a stream whose check id it does not know (2 is
+    reserved, 4 bytes wide) WITHOUT verifying the check; the decoder
+    must refuse it. Re-sign header and footer so only the id is odd."""
+    x = bytearray(stdlzma.compress(b"abc" * 30, check=stdlzma.CHECK_CRC32))
+    x[7] = x[-3] = 2  # stream flags in header and footer
+    x[8:12] = struct.pack("<I", zlib.crc32(bytes(x[6:8])))
+    x[-12:-8] = struct.pack("<I", zlib.crc32(bytes(x[-8:-2])))
+    assert stdlzma.decompress(bytes(x)) == b"abc" * 30  # unverified
+    with pytest.raises(ValueError, match="check type"):
+        decode_xz(bytes(x))
 
 
 def test_skeleton_crcs_are_verified():
@@ -200,24 +160,47 @@ def test_truncated_inputs_raise():
 
 def test_output_cap_bounds_decompression_bombs():
     # a few KB of compressed zeros declare far more output than the
-    # cap allows; every container path must raise ValueError (the
-    # quarantine contract), never OOM toward MemoryError
+    # cap allows; the decoder must raise ValueError (the quarantine
+    # contract), never OOM toward MemoryError
     bomb = b"\x00" * (1 << 20)  # 1 MiB of zeros compresses to ~1 KB
     xz = stdlzma.compress(bomb, check=stdlzma.CHECK_CRC32)
     with pytest.raises(ValueError, match="cap"):
         decode_xz(xz, max_output=1 << 16)
-    alone_known = stdlzma.compress(bomb, format=stdlzma.FORMAT_ALONE)
+    # the cap spans streams, and it does not fire on in-bounds output
     with pytest.raises(ValueError, match="cap"):
-        decode_lzma_alone(alone_known, max_output=1 << 16)
-    # unknown-size (end-marker) lzma-alone takes the hard_cap path
-    comp = stdlzma.LZMACompressor(
-        format=stdlzma.FORMAT_ALONE,
-        filters=[{"id": stdlzma.FILTER_LZMA1}],
-    )
-    alone = comp.compress(bomb) + comp.flush()
-    unknown = alone[:5] + b"\xff" * 8 + alone[13:]
-    if stdlzma.decompress(unknown, format=stdlzma.FORMAT_ALONE) == bomb:
-        with pytest.raises(ValueError, match="cap"):
-            decode_lzma_alone(unknown, max_output=1 << 16)
-    # and the caps do not fire on in-bounds output
-    assert decode_xz(xz, max_output=1 << 21) == bomb
+        decode_xz(xz + xz, max_output=(1 << 21) - 1)
+    assert decode_xz(xz, max_output=1 << 20) == bomb
+    assert decode_xz(xz + xz, max_output=1 << 21) == bomb + bomb
+
+
+def test_corrupt_second_stream_raises():
+    """``lzma.decompress`` drops an undecodable non-first stream as
+    "trailing garbage" and returns the first stream's text; the
+    decoder must reject it. Flip a bit in the second stream's
+    compressed data and, separately, in its check."""
+    first, second = b"first " * 200, b"second " * 200
+    a = stdlzma.compress(first, check=stdlzma.CHECK_CRC64)
+    b = stdlzma.compress(second, check=stdlzma.CHECK_CRC64)
+    data_at = 12 + (b[12] + 1) * 4 + 8  # inside the LZMA2 data
+    check_at = _block_check_end(b) - 1  # last byte of the CRC64
+    for at in (data_at, check_at):
+        bad = bytearray(b)
+        bad[at] ^= 0x10
+        corrupt = a + bytes(bad)
+        assert stdlzma.decompress(corrupt) == first  # the trap
+        with pytest.raises(ValueError):
+            decode_xz(corrupt)
+
+
+def test_stream_padding_must_be_four_byte_aligned():
+    a = stdlzma.compress(b"s1 " * 50, check=stdlzma.CHECK_CRC32)
+    b = stdlzma.compress(b"s2 " * 50, check=stdlzma.CHECK_NONE)
+    plain = b"s1 " * 50 + b"s2 " * 50
+    for pad in (0, 4, 8):
+        assert decode_xz(a + b"\x00" * pad + b) == plain
+        assert decode_xz(a + b + b"\x00" * pad) == plain
+    for pad in (1, 2, 3, 5, 6, 7):
+        with pytest.raises(ValueError):
+            decode_xz(a + b"\x00" * pad + b)
+        with pytest.raises(ValueError):
+            decode_xz(a + b + b"\x00" * pad)

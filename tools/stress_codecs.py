@@ -508,8 +508,8 @@ def round9_kernels() -> None:
 
 
 def round10_kernels() -> None:
-    """This session's readers: hand-rolled DEFLATE inflate, MIME
-    message parse, PDF text extraction, ORC stripe RLEv2 decode."""
+    """Raw DEFLATE inflate (in-process zlib), MIME message parse,
+    PDF text extraction, ORC stripe RLEv2 decode."""
     import zlib
 
     from datawarehouseproject_spark.functions.inflate import inflate
@@ -532,7 +532,7 @@ def round10_kernels() -> None:
     secs, out = _timeit(inflate, payload)
     assert out == text
     print(json.dumps({
-        "kernel": "deflate_hand_inflate",
+        "kernel": "deflate_inflate",
         "media": f"{len(text)} bytes text, level 9",
         "mb_per_s": round(len(text) / secs / 1e6, 2),
         "sec": round(secs, 4),
@@ -545,7 +545,7 @@ def round10_kernels() -> None:
     secs, out = _timeit(lambda: inflate(stored, max_output=1 << 24))
     assert out == blob
     print(json.dumps({
-        "kernel": "deflate_hand_inflate_stored",
+        "kernel": "deflate_inflate_stored",
         "media": f"{len(blob)} incompressible bytes (stored blocks)",
         "mb_per_s": round(len(blob) / secs / 1e6, 2),
         "sec": round(secs, 4),
@@ -587,15 +587,12 @@ def round10_kernels() -> None:
 
 
 def round11_kernels() -> None:
-    """This session's readers: the hand-rolled LZMA range decoder
-    (.xz full decode) — compressible text, incompressible data
-    (LZMA2 uncompressed chunks), and the legacy .lzma container."""
+    """.xz full decode (in-process liblzma, stream by stream) —
+    compressible text and incompressible data (LZMA2 uncompressed
+    chunks)."""
     import lzma as stdlzma
 
-    from datawarehouseproject_spark.functions.lzma_codec import (
-        decode_lzma_alone,
-        decode_xz,
-    )
+    from datawarehouseproject_spark.functions.lzma_codec import decode_xz
 
     text = ("the quick brown fox jumps over the lazy dog. " * 10000).encode()
     xz = stdlzma.compress(text, check=stdlzma.CHECK_CRC64)
@@ -617,16 +614,6 @@ def round11_kernels() -> None:
         "kernel": "lzma_xz_decode_incompressible",
         "media": f"{len(blob)} random bytes (uncompressed chunks)",
         "mb_per_s": round(len(blob) / secs / 1e6, 2),
-        "sec": round(secs, 4),
-    }))
-
-    alone = stdlzma.compress(text, format=stdlzma.FORMAT_ALONE)
-    secs, out = _timeit(decode_lzma_alone, alone)
-    assert out == text
-    print(json.dumps({
-        "kernel": "lzma_alone_decode",
-        "media": f"{len(text)} bytes text, legacy .lzma header",
-        "mb_per_s": round(len(text) / secs / 1e6, 2),
         "sec": round(secs, 4),
     }))
 
